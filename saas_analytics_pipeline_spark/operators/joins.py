@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from saas_analytics_pipeline_spark import seeds
 from saas_analytics_pipeline_spark.functions import money, money_sum
+from saas_analytics_pipeline_spark.operators.lake import session_confs
 from saas_analytics_pipeline_spark.qcatalog import query
 from saas_analytics_pipeline_spark.sources import load_table
 
@@ -616,14 +617,5 @@ def q_bloom_prejoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern), and every conf restored before returning; later queries in
     the session see unchanged planning behavior (the write_zordered
     lesson, ADVICE r6)."""
-    prev = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    for k, v in _BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with session_confs(spark, _BLOOM_CONFS):
         return bloom_prejoin_frame(spark, sf_dir).localCheckpoint(eager=True)
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)

@@ -39,6 +39,7 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,6 +47,31 @@ from pyspark.sql import functions as F
 from saas_analytics_pipeline_spark.qcatalog import query
 from saas_analytics_pipeline_spark.scratch import scratch_path, sf_tag
 from saas_analytics_pipeline_spark.sources import load_table
+
+
+@contextmanager
+def session_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set session ``confs`` for the block only: on exit — an exception
+    included — every key gets its previous value back, and a key that
+    was unset before is unset again, so later queries in the session
+    plan exactly as they would have (the write_zordered lesson, ADVICE
+    r6)."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+# the 100 TB fact-fact regime: no broadcast joins, so co-location (or its
+# absence) shows in the plan
+_NO_BROADCAST = {"spark.sql.autoBroadcastJoinThreshold": "-1"}
 
 # o_channel backfill tag for generation-B rows (deterministic from the key
 # so the DuckDB oracle replays it without reading the written files)
@@ -276,10 +302,9 @@ def write_zordered(spark: SparkSession, sf_dir: str) -> str:
     # own encoding). Scoped to THIS write: the session conf is saved and
     # restored so an unrelated later write in the same session keeps its
     # own timestamp encoding (e.g. for INT96-expecting consumers).
-    conf_key = "spark.sql.parquet.outputTimestampType"
-    prev = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, "TIMESTAMP_MICROS")
-    try:
+    with session_confs(
+        spark, {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}
+    ):
         (
             coded.repartitionByRange(ZORDER_FILES, "_z")
             .sortWithinPartitions("_z")
@@ -287,11 +312,6 @@ def write_zordered(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(base)
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev)
     return base
 
 
@@ -874,17 +894,8 @@ def q_bucket_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     every subsequent join on the key reads co-located buckets — the
     amortization a daily orders x lineitem pipeline banks on. The
     rollup is partial-aggregable above the co-located join."""
-    prev = {k: spark.conf.get(k, None) for k in _BUCKET_CONFS}
-    for k, v in _BUCKET_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with session_confs(spark, _BUCKET_CONFS):
         return bucket_join_frame(spark, sf_dir).localCheckpoint(eager=True)
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 # --------------------------------------------------------------------------
@@ -2064,18 +2075,12 @@ def q_optimize_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     monthly = orders.where(
         F.year("o_orderdate").between(1996, 1997)
     ).withColumn("mk", F.year("o_orderdate") * 100 + F.month("o_orderdate"))
-    conf_key = "spark.sql.files.maxRecordsPerFile"
-    prev_conf = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, str(OPT_MRPF))
-    try:
+    with session_confs(
+        spark, {"spark.sql.files.maxRecordsPerFile": str(OPT_MRPF)}
+    ):
         P.publish_partition_overwrite(
             spark, monthly.repartition(F.col("mk")), root, "mk"
         )
-    finally:
-        if prev_conf is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev_conf)
     before = P.current_manifest(root)
     P.optimize_table(spark, root)
     after = P.current_manifest(root)
@@ -2638,22 +2643,13 @@ def q_bucket_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     — reads co-located pre-sorted buckets through their manifests, and
     GDPR-grain deletes cost O(keys) tombstone metadata, never a
     rewrite."""
-    prev = {k: spark.conf.get(k, None) for k in _BUCKET_MANIFEST_CONFS}
-    for k, v in _BUCKET_MANIFEST_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with session_confs(spark, _BUCKET_MANIFEST_CONFS):
         p1, p2 = bucket_manifest_phases(spark, sf_dir)
         return (
             p1.unionByName(p2)
             .orderBy("phase", "o_orderpriority")
             .localCheckpoint(eager=True)
         )
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 # ---------------------------------------------------------------------------
@@ -2816,21 +2812,13 @@ def q_bucket_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Ref: the reference leans on BigQuery clustering within partitioned
     tables (README.md:90-91); this is the explicit lake-side twin."""
-    conf = "spark.sql.autoBroadcastJoinThreshold"
-    prev = spark.conf.get(conf, None)
-    spark.conf.set(conf, "-1")  # the 100 TB fact-fact regime
-    try:
+    with session_confs(spark, _NO_BROADCAST):
         p1, p2 = bucket_partitioned_frames(spark, sf_dir)
         return (
             p1.unionByName(p2)
             .orderBy("phase", "cg")
             .localCheckpoint(eager=True)
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, prev)
 
 
 # ---------------------------------------------------------------------------
@@ -3021,21 +3009,13 @@ def q_optimize_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ref: the reference relies on BigQuery's server-side clustering
     maintenance (README.md:90-91); this is the lake-side equivalent
     under the publish protocol."""
-    conf = "spark.sql.autoBroadcastJoinThreshold"
-    prev = spark.conf.get(conf, None)
-    spark.conf.set(conf, "-1")  # the 100 TB fact-fact regime
-    try:
+    with session_confs(spark, _NO_BROADCAST):
         p1, p2 = optimize_bucketed_frames(spark, sf_dir)
         return (
             p1.unionByName(p2)
             .orderBy("phase", "cg")
             .localCheckpoint(eager=True)
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, prev)
 
 
 # ---------------------------------------------------------------------------
@@ -3137,10 +3117,7 @@ def q_catalog_bucketed_partitioned(
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
     )
-    conf = "spark.sql.autoBroadcastJoinThreshold"
-    prev = spark.conf.get(conf, None)
-    spark.conf.set(conf, "-1")  # the 100 TB fact-fact regime
-    try:
+    with session_confs(spark, _NO_BROADCAST):
         P.publish_tables(
             spark,
             {"f96": f96, "f97": f97, "dim": dim},
@@ -3204,11 +3181,6 @@ def q_catalog_bucketed_partitioned(
             .orderBy("c_mktsegment")
             .localCheckpoint(eager=True)
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, prev)
 
 
 # ---------------------------------------------------------------------------
@@ -3298,10 +3270,7 @@ def q_catalog_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
     )
-    conf = "spark.sql.autoBroadcastJoinThreshold"
-    prev = spark.conf.get(conf, None)
-    spark.conf.set(conf, "-1")  # the 100 TB fact-fact regime
-    try:
+    with session_confs(spark, _NO_BROADCAST):
         P.publish_tables(
             spark,
             {"fact": fact, "dim": dim},
@@ -3356,11 +3325,6 @@ def q_catalog_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("phase", "c_mktsegment")
             .localCheckpoint(eager=True)
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, prev)
 
 
 # ---------------------------------------------------------------------------
@@ -3754,18 +3718,10 @@ def q_catalog_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     cap = math.ceil(dim.count() / CM_DIM_FILES)
-    conf_key = "spark.sql.files.maxRecordsPerFile"
-    prev_conf = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, str(cap))
-    try:
+    with session_confs(spark, {"spark.sql.files.maxRecordsPerFile": str(cap)}):
         P.publish_tables(
             spark, {"fact": fact.coalesce(1), "dim": dim.coalesce(1)}, cat
         )
-    finally:
-        if prev_conf is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev_conf)
 
     def phase(tag: str, seq: int) -> DataFrame:
         rec = P.catalog_record(cat, seq=seq)

@@ -260,3 +260,22 @@ def test_merge_upsert_applies_latest_version_and_inserts(spark, sf_dir):
         assert rows[b].n_rows == src[b].n  # no row lost or duplicated
         expected = src[b].s + (src[b].n * UPSERT_BUMP if b in (0, 5) else 0)
         assert rows[b].sum_custkey == expected, f"bucket {b}"
+
+
+def test_session_confs_restores_confs_after_an_exception(spark):
+    """session_confs scopes confs to its block: after an exception a key
+    that was unset before is unset again, and a key that was set gets its
+    previous value back."""
+    from saas_analytics_pipeline_spark.operators.lake import session_confs
+
+    unset_key = "spark.saas_analytics.test.scoped_conf"
+    set_key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(set_key)
+    assert spark.conf.get(unset_key, None) is None
+    with pytest.raises(RuntimeError, match="boom"):
+        with session_confs(spark, {unset_key: "on", set_key: "3"}):
+            assert spark.conf.get(unset_key) == "on"
+            assert spark.conf.get(set_key) == "3"
+            raise RuntimeError("boom")
+    assert spark.conf.get(unset_key, None) is None
+    assert spark.conf.get(set_key) == before

@@ -1426,24 +1426,40 @@ def test_purge_all_partitions_leaves_readable_empty_table(spark, root):
     assert rep["files"] == 0 and df.count() == 0
 
 
-def test_parent_cycle_guard_terminates(spark, root):
+@pytest.mark.parametrize("unit", ["table", "catalog"])
+def test_parent_cycle_guard_terminates(spark, root, unit):
     """A hand-corrupted self-loop parent link (the pre-fix concurrent-
-    OPTIMIZE symptom) must not hang any lineage walk."""
+    OPTIMIZE symptom) must not hang any lineage walk — over a plain
+    table's manifests or a one-table catalog's records."""
     import json
 
     for tag in (1, 2, 3):
-        P.publish_next(spark, _frame(spark, tag), root)
-    name = P.current_manifest(root)["txid"]
-    man_path = os.path.join(root, "manifests", P._manifest_name(name))
+        if unit == "table":
+            P.publish_next(spark, _frame(spark, tag), root)
+        else:
+            P.publish_tables(spark, {"t": _frame(spark, tag)}, root)
+    if unit == "table":
+        name = P._manifest_name(P.current_manifest(root)["txid"])
+    else:
+        name = P._catalog_name(P.catalog_record(root)["txid"])
+    man_path = os.path.join(root, "manifests", name)
     with open(man_path) as f:
         m = json.load(f)
-    m["parent"] = P._manifest_name(name)  # self-loop
+    m["parent"] = name  # self-loop
     with open(man_path, "w") as f:
         json.dump(m, f)
-    with pytest.raises(FileNotFoundError):
-        P.snapshot_manifest(root, seq=1)  # walk terminates, not hangs
-    P.vacuum(root, retain=1)  # both walks bounded
-    assert _snap(P.read_current(spark, root)) == _snap(_frame(spark, 3))
+    with pytest.raises(FileNotFoundError):  # walk terminates, not hangs
+        if unit == "table":
+            P.snapshot_manifest(root, seq=1)
+        else:
+            P.catalog_record(root, seq=1)
+    if unit == "table":
+        P.vacuum(root, retain=1)  # both walks bounded
+        got = P.read_current(spark, root)
+    else:
+        P.vacuum_catalog(root, retain=1)
+        got = P.read_catalog_table(spark, root, "t")
+    assert _snap(got) == _snap(_frame(spark, 3))
 
 
 def test_read_where_mixed_partition_keys_fall_back_conservatively(
@@ -2190,9 +2206,9 @@ def test_scoped_deletes_plan_size_constant_in_group_count(spark, root, tmp_path)
     (file -> group-set) frame, and a row drops only when the sets
     intersect. The r12/r13 shape chained two joins PER group, so routed
     reads slowed linearly between OPTIMIZE runs. Certifies both the
-    plan bound (join count identical for 1 vs 3 groups) and the
-    multi-group semantics (each group masks only its own stale
-    copies)."""
+    plan bound (join count and total node count identical for 1 vs 3
+    groups) and the multi-group semantics (each group masks only its
+    own stale copies)."""
 
     def build(r, n_groups):
         # keys 7..7+n-1 each live in month 199601 plus a PRIVATE month
@@ -2236,15 +2252,15 @@ def test_scoped_deletes_plan_size_constant_in_group_count(spark, root, tmp_path)
         for r in P.read_current(spark, root3).collect()
     }
     assert got == {(7 + i, 199601): 99 + i for i in range(3)}, got
-    njoins = [
-        P.read_current(spark, r)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-        .count("Join")
+    plans = [
+        P.read_current(spark, r)._jdf.queryExecution().executedPlan().toString()
         for r in (root, root3)
     ]
-    assert njoins[0] == njoins[1], njoins
+    assert plans[0].count("Join") == plans[1].count("Join"), plans
+    # the WHOLE reader plan is group-count independent: every group's
+    # tombstone files are read in one scan, not one scan per group
+    nodes = [sum(1 for ln in p.splitlines() if ln.strip()) for p in plans]
+    assert nodes[0] == nodes[1], plans
 
 
 def test_scoped_group_valve_caps_reader_plan_growth(spark, root, backend):
@@ -3033,3 +3049,68 @@ def test_scoped_groups_with_identical_scopes_consolidate(spark, root):
     got = {r["k"]: r["v"] for r in P.read_current(spark, root).collect()}
     # last resubscribe wins day 1; both stale copies in day 2 hidden
     assert got == {0: 8, 2: 28, 3: 38, 10: 101}
+
+
+def test_table_and_one_table_catalog_run_the_same_lifecycle(
+    spark, root, cat, backend
+):
+    """A table is a catalog of one: the same op sequence — partitioned
+    publish, delete, resubscribe increment, maintain, vacuum — on a plain
+    table and on a one-table catalog gives identical rows after every
+    step, the same live-file count and the same tombstone-register
+    shape."""
+    schema = "k long, mk long, v long"
+    base = spark.createDataFrame(
+        [(k, 199601 + k % 3, 10 * k) for k in range(12)], schema
+    ).repartition(2)
+    gone = spark.createDataFrame([(4,), (7,)], "k long")
+    # k=4 resubscribes into month 199601 while its stale copy survives in
+    # a carried month-199602 file; k=7 stays deleted
+    inc = spark.createDataFrame(
+        [(k, 199601, 10 * k) for k in (0, 3, 6, 9)] + [(4, 199601, 999)],
+        schema,
+    )
+
+    def registers(m):
+        return (
+            m.get("delete_key"),
+            len(m.get("deletes") or []),
+            [
+                (len(g["tombs"]), len(g["files"]))
+                for g in m.get("scoped_deletes") or []
+            ],
+        )
+
+    def same_state(step):
+        plain = P.current_manifest(root)
+        rec = P.catalog_record(cat)
+        one = P._load_manifest(
+            os.path.join(cat, "tables", "t"), rec["tables"]["t"]
+        )
+        rows = _snap(P.read_current(spark, root))
+        assert rows == _snap(P.read_catalog_table(spark, cat, "t")), step
+        assert plain["n_files"] == one["n_files"], step
+        assert registers(plain) == registers(one), step
+        return {r[0]: r[2] for r in rows}
+
+    P.publish_partition_overwrite(spark, base, root, "mk")
+    P.publish_tables(
+        spark, {"t": base}, cat, partitions={"t": "mk"}, backend=backend
+    )
+    assert len(same_state("publish")) == 12
+    P.publish_deletes(spark, gone, root, "k")
+    P.publish_catalog_deletes(spark, cat, "t", gone, "k", backend=backend)
+    assert 4 not in same_state("delete")
+    P.publish_partition_overwrite(spark, inc, root, "mk")
+    P.publish_catalog_increments(spark, cat, {"t": inc}, backend=backend)
+    got = same_state("increment")
+    assert got[4] == 999 and 7 not in got
+    _, n_deletes, scoped = registers(P.current_manifest(root))
+    assert n_deletes == 1 and len(scoped) == 1
+    P.maintain_table(spark, root, stats_cols=["k"], backend=backend)
+    P.maintain_catalog(spark, cat, stats_cols={"t": ["k"]}, backend=backend)
+    assert same_state("maintain") == got
+    assert registers(P.current_manifest(root)) == (None, 0, [])
+    P.vacuum(root)
+    P.vacuum_catalog(cat)
+    assert same_state("vacuum") == got
